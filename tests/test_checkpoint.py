@@ -1,6 +1,8 @@
 """Checkpoint store + pipeline: atomic stage tables, fingerprint guard,
 resume-skip, lineage metrics (base_fs_cache.rs / cache_metadata.rs analogs)."""
 
+import json
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,6 +45,32 @@ def test_resume_skips_completed_stage(spark, tmp_path):
     store.run_stage(spark, "s", build)
     store.run_stage(spark, "s", build)
     assert len(calls) == 1  # second run resumed from the table
+
+
+def test_manifest_without_upstream_ids_is_reused_over_raw_input(spark, tmp_path):
+    """A manifest written before upstream ids were recorded reads as {}: a
+    stage over the raw input (no identity) is still reused, while a stage
+    over another stage rebuilds once."""
+    store = CheckpointStore(str(tmp_path / "ckpt_legacy"), CFG)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return spark.range(10)
+
+    store.run_stage(spark, "a", build, upstream=["docs"])
+    store.run_stage(spark, "b", build, upstream=["a"])
+    for name in ("a", "b"):
+        path = store._manifest_path(name)
+        with open(path) as f:
+            m = json.load(f)
+        del m["upstream_ids"]
+        with open(path, "w") as f:
+            json.dump(m, f)
+    store.run_stage(spark, "a", build, upstream=["docs"])
+    assert len(calls) == 2  # "a" reused
+    store.run_stage(spark, "b", build, upstream=["a"])
+    assert len(calls) == 3  # "b" rebuilt: its upstream id was unknown
 
 
 def test_snapshot_retention_and_restore(spark, tmp_path):
@@ -160,3 +188,39 @@ def test_pipeline_end_to_end_and_resume(spark, tmp_path):
     assert sorted(
         r["count"] for r in res2.groups.groupBy("cluster_id").count().collect()
     ) == [5, 7]
+
+
+def _sizes(res):
+    return sorted(r["count"] for r in res.groups.groupBy("cluster_id").count().collect())
+
+
+def test_rerun_on_grown_corpus_rebuilds_downstream_stages(spark, tmp_path):
+    """Stages record the write ids of their upstreams: growing cluster 0
+    from 5 to 8 members upserts the signature store, so edges, groups and
+    group_stats must rebuild instead of returning the old [5, 7]."""
+    cb = CorpusBuilder(seed=61)
+    base0 = cb.base_tokens(500)
+    cb.add_cluster(0, base0, 5, intra_d=30)
+    cb.add_cluster(1, cb.base_at_distance(base0, 200), 7, intra_d=30, site=1)
+    root = str(tmp_path / "pipe_grow")
+    docs = cb.to_spark(spark).localCheckpoint()
+    res = run_dedup_pipeline(spark, docs, root, tolerance=0.100, cfg=CFG)
+    assert _sizes(res) == [5, 7]
+
+    for m in range(5, 8):
+        cb.add_doc(
+            f"https://site00000.example/0000/{m:03d}", cb.member_at_distance(base0, 30)
+        )
+    grown = cb.to_spark(spark).localCheckpoint()
+    res2 = run_dedup_pipeline(spark, grown, root, tolerance=0.100, cfg=CFG)
+    assert _sizes(res2) == [7, 8]
+    for stage in ("edges", "groups", "group_stats"):
+        assert res2.metrics[stage]["write_id"] != res.metrics[stage]["write_id"]
+    assert res2.metrics["edges"]["upstream_ids"] == {
+        "signatures": res2.metrics["signatures"]["write_id"]
+    }
+
+    # an unchanged re-run reuses every stage: no manifest is rewritten
+    res3 = run_dedup_pipeline(spark, grown, root, tolerance=0.100, cfg=CFG)
+    assert _sizes(res3) == [7, 8]
+    assert res3.metrics == res2.metrics

@@ -77,6 +77,12 @@ def _small_star(e: DataFrame) -> DataFrame:
     return to_min.unionAll(keep_root).distinct()
 
 
+# Edge-count cutoff of the single-task route: a graph with at most this many
+# edges is solved in one executor task, both by connected_components
+# (union-find) and by grouping.matchset_groups (the greedy replay).
+SINGLE_TASK_MAX_EDGES = 500_000
+
+
 def _single_task_cc(e: DataFrame) -> DataFrame:
     """Union-find over a SMALL canonical edge set in one executor task.
 
@@ -178,7 +184,7 @@ def connected_components(
     id1: str = "id1",
     id2: str = "id2",
     max_iterations: int = 50,
-    rows_per_partition: int = 500_000,
+    rows_per_partition: int = SINGLE_TASK_MAX_EDGES,
 ) -> DataFrame:
     """edges (id1, id2) -> assignment (id, component) where component is the
     minimum member id of the node's component.

@@ -10,11 +10,12 @@ Two modes (SURVEY.md §2.6 G3):
 
 * ``cc`` — plain connected components over verified edges (what the
   north_star names; the scalable default);
-* ``matchset`` — exact reference parity: within each component (components
-  are small after verification), a pandas ``applyInPandas`` pass replays the
-  greedy consume in ``(doclen, id)`` order.  The reference's own test
-  generators guarantee regimes where the two coincide
-  (``tests/test_find_all.rs:77-84``: intra*2 < inter).
+* ``matchset`` — exact reference parity: the greedy consume is replayed in
+  ``(doclen, id)`` order.  A graph within the single-task cutoff is
+  replayed in ONE ``mapInPandas`` task; a larger one is split into
+  connected components and replayed per component by ``applyInPandas``.
+  The reference's own test generators guarantee regimes where the two
+  modes coincide (``tests/test_find_all.rs:77-84``: intra*2 < inter).
 """
 
 from __future__ import annotations
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from vid_dup_finder_lib_spark.operators import components
 from vid_dup_finder_lib_spark.operators.components import connected_components
 
 
@@ -97,18 +99,48 @@ def _greedy_matchset(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
+def _single_task_matchset(e: DataFrame, schema: T.StructType) -> DataFrame:
+    """Greedy replay over a small edge set in one task.
+
+    The replay runs once over the whole edge list, which equals the union
+    of per-component replays: a seed's unmatched neighbours lie in its own
+    component, so the consume never crosses components and the global
+    ``(doclen, id)`` order restricted to a component is that component's
+    order (tests/test_matchset_routes.py pins this equality against the
+    per-component route).
+    """
+
+    def kernel(batches):
+        frames = list(batches)
+        if frames:
+            yield _greedy_matchset(pd.concat(frames, ignore_index=True))
+
+    # coalesce(1): e is a local checkpoint, so this is one task reading its
+    # blocks — no component labelling, no join, no shuffle
+    return e.coalesce(1).mapInPandas(kernel, schema=schema)
+
+
 def matchset_groups(edges: DataFrame, max_component_edges: int = 50_000_000) -> DataFrame:
     """Exact reference-parity grouping: (cluster_id, id, is_seed).
 
-    cluster_id is the seed's id.  Components are small (bounded by real dup
-    cluster sizes), so the per-component pandas pass is cheap and fully
+    cluster_id is the seed's id.  The narrow ``(id1, id2, len1, len2)``
+    edges are materialized once.  When there are at most
+    ``min(SINGLE_TASK_MAX_EDGES, max_component_edges)`` edge rows (the
+    connected-components cutoff, components.py), the replay runs in one
+    task (``_single_task_matchset``): no component labelling job, no
+    edge⋈assignment join, no guard job, no per-component shuffle.
+    Otherwise connected components split the graph and one
+    ``applyInPandas`` group per component replays the consume, fully
     parallel across components.
 
     Guard: the greedy replay materializes one whole component per task.  A
     pathological mega-component (chained boilerplate dupes) would OOM that
     task, so components above ``max_component_edges`` raise with a clear
     message instead — use ``grouping="cc"`` (fully distributed) or strip
-    boilerplate first.  Never a silent wrong answer.
+    boilerplate first.  Never a silent wrong answer.  The single-task route
+    needs no guard (no component can exceed the whole edge list); the
+    distributed route checks it before returning, so the ``ValueError`` is
+    raised by this call.
 
     The default cap is memory-bound, not time-bound: the sorted-adjacency
     replay is O(E log maxdeg) (the round-2 quadratic suffix scan is gone),
@@ -116,8 +148,13 @@ def matchset_groups(edges: DataFrame, max_component_edges: int = 50_000_000) -> 
     executor-thread's share at the documented 4 GB/core, an order of
     magnitude above the round-2 cap.
     """
-    assignment = connected_components(edges)
-    e = edges.join(
+    schema = _greedy_schema(edges)
+    e = edges.select("id1", "id2", "len1", "len2").localCheckpoint(eager=True)
+    if e.count() <= min(components.SINGLE_TASK_MAX_EDGES, max_component_edges):
+        return _single_task_matchset(e, schema)
+
+    assignment = connected_components(e)
+    e = e.join(
         assignment.withColumnRenamed("id", "id1"), "id1"
     ).select("component", "id1", "id2", "len1", "len2")
     e = e.localCheckpoint(eager=True)  # consumed by the guard AND the replay
@@ -130,7 +167,7 @@ def matchset_groups(edges: DataFrame, max_component_edges: int = 50_000_000) -> 
             "— use grouping='cc' or strip_boilerplate for corpora like this"
         )
     return e.groupBy("component").applyInPandas(
-        lambda pdf: _greedy_matchset(pdf), schema=_greedy_schema(edges)
+        lambda pdf: _greedy_matchset(pdf), schema=schema
     )
 
 

@@ -26,15 +26,18 @@ from pyspark.sql import functions as F
 from vid_dup_finder_lib_spark.config import SigConfig
 
 
-def _mismatch(x: Column, y: Column) -> Column:
-    # zip_with pads the shorter array with nulls; a padded position is a
-    # mismatch by definition (covers the length-delta term).
-    return F.when(x.isNull() | y.isNull(), F.lit(1)).otherwise((x != y).cast("int"))
-
-
 def token_hamming_col(t1: Column, t2: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(t1, t2, _mismatch), F.lit(0).cast("long"), lambda acc, v: acc + v
+    """Positional mismatch count of two token arrays, null if either is null.
+
+    ``zip_with`` pads the shorter array with nulls, and ``coalesce(x = y,
+    false)`` makes a padded position a mismatch (the length-delta term);
+    the mismatches are what is left after removing the ``true`` matches —
+    one interpreted lambda per position.  The null guard matters: with ANSI
+    off ``size(NULL)`` is -1, which would pass any radius test."""
+    matches = F.zip_with(t1, t2, lambda x, y: F.coalesce(x == y, F.lit(False)))
+    return F.when(
+        t1.isNotNull() & t2.isNotNull(),
+        F.size(F.array_remove(matches, True)).cast("long"),
     )
 
 

@@ -16,6 +16,11 @@ North-rule requirements re-expressed from the reference's cache layer:
 * metrics + lineage — every stage records row count, per-partition row
   counts (via ``spark_partition_id``), wall time and upstream stage names
   into ``_manifest.json`` (A7's stats prints, made durable);
+* staleness — every write gets a fresh ``write_id``, and a stage records
+  the ``write_id`` of each upstream it was built from (the signature
+  store's manifest carries one too); ``run_stage`` rebuilds a stage whose
+  upstreams were rewritten since, so a re-run over a grown corpus never
+  reuses edges or groups of the old one;
 * snapshot retention — each overwrite retires the outgoing stage
   generation into ``.snapshots/<stage>/<generation>/``, K generations deep
   (``keep_generations``; the reference keeps *timestamped, plural* DB
@@ -130,6 +135,17 @@ class CheckpointStore:
     def read(self, spark: SparkSession, name: str) -> DataFrame:
         return spark.read.parquet(os.path.join(self._stage_dir(name), "data"))
 
+    def _upstream_ids(self, upstream: list[str] | None) -> dict:
+        """{upstream stage: its current write_id} for the upstreams that are
+        stages under this root (the signature store included); other names,
+        like the raw ``docs`` input, carry no identity."""
+        ids = {}
+        for u in upstream or []:
+            m = self.manifest(u)
+            if m is not None:
+                ids[u] = m.get("write_id")
+        return ids
+
     def write(
         self,
         name: str,
@@ -157,6 +173,8 @@ class CheckpointStore:
             "partition_rows": {int(r["partition_id"]): int(r["count"]) for r in part_counts},
             "num_partitions": len(part_counts),
             "upstream": upstream or [],
+            "upstream_ids": self._upstream_ids(upstream),
+            "write_id": uuid.uuid4().hex,
             "wall_seconds": round(time.time() - t0, 3),
             "schema": written.schema.simpleString(),
         }
@@ -219,8 +237,16 @@ class CheckpointStore:
         upstream: list[str] | None = None,
         force: bool = False,
     ) -> DataFrame:
-        """Resume-aware stage execution: skip + re-read when complete."""
-        if not force and self.is_complete(name):
+        """Resume-aware stage execution: skip + re-read when complete and
+        built from the current generation of every upstream."""
+        if (
+            not force
+            and self.is_complete(name)
+            # a manifest from before upstream ids were recorded reads as {}:
+            # stages over the raw input stay reusable, stages over a store
+            # or another stage rebuild once
+            and self.manifest(name).get("upstream_ids", {}) == self._upstream_ids(upstream)
+        ):
             return self.read(spark, name)
         return self.write(name, build(), upstream)
 

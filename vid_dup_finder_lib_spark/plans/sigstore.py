@@ -469,6 +469,9 @@ class PartitionedSignatureStore:
             "options": self.extra_fingerprint,
             "num_buckets": self.num_buckets,
             "last_op": op,
+            # identity of this table state: checkpoint stages built from the
+            # store record it and rebuild when it changes
+            "write_id": uuid.uuid4().hex,
             "last_dirty_buckets": sorted(int(b) for b in dirty),
             # ledger preserved unless the caller supplies a new one
             "generations": self._generations(),
